@@ -15,26 +15,36 @@ import com.github.luben.zstd.Zstd
   *   byte  0      format version (2)
   *   byte  1      codec format version (1)
   *   byte  2      flags: 0x01 byte-shuffle | 0x02 memcpy | 0x04 bit-shuffle
-  *                       | compressor-format-id << 5 (zstd = 4)
+  *                       | 0x10 don't split | compressor-format-id << 5 (zstd = 4)
   *   byte  3      typesize
   *   bytes 4-7    nbytes   (uncompressed length)
   *   bytes 8-11   blocksize
   *   bytes 12-15  cbytes   (total frame length)
   *   then, unless memcpy flag:
   *     int32 * nblocks     block start offsets (from frame start)
-  *     per block: int32 csize, then the zstd stream for that block
-  *                (csize == block's uncompressed size => stored raw)
+  *     per block: one stream, or `typesize` streams when split (below),
+  *                each an int32 csize then the zstd stream
+  *                (csize == stream's uncompressed size => stored raw)
   *   with memcpy flag: the raw (unshuffled) bytes follow the header.
   * }}}
   *
-  * We always emit a single block (blocksize = nbytes); the decoder accepts
-  * any block count/size. Shuffle is applied per block, matching c-blosc.
+  * Split streams: c-blosc 1.x stores a block as `typesize` streams, one
+  * per byte plane of the shuffled block, unless the don't-split flag is
+  * set, typesize > 16, blocksize / typesize < 128, or the block is the
+  * leftover (short) last block.
+  *
+  * We always emit a single block (blocksize = nbytes) as one stream with
+  * the don't-split flag set; the decoder accepts any block count/size and
+  * split streams. Shuffle is applied per block, matching c-blosc.
   */
 object Blosc {
   private val Version: Byte = 2
   private val VersionLz: Byte = 1
   private val FlagShuffle = 0x01
   private val FlagMemcpy = 0x02
+  private val FlagDontSplit = 0x10
+  private val MaxSplits = 16
+  private val MinSplitBuffer = 128
   private val ZstdFormatId = 4
 
   final case class Header(flags: Int, typesize: Int, nbytes: Int, blocksize: Int, cbytes: Int)
@@ -121,7 +131,7 @@ object Blosc {
       val total = 16 + 4 + 4 + compressedLen
       val out = new Array[Byte](total)
       out(0) = Version; out(1) = VersionLz
-      out(2) = ((ZstdFormatId << 5) | (if (doShuffle) FlagShuffle else 0)).toByte
+      out(2) = ((ZstdFormatId << 5) | FlagDontSplit | (if (doShuffle) FlagShuffle else 0)).toByte
       out(3) = typesize.toByte
       writeLE(out, 4, nbytes); writeLE(out, 8, nbytes); writeLE(out, 12, total)
       writeLE(out, 16, 20)            // bstarts[0]: block starts right after
@@ -164,19 +174,27 @@ object Blosc {
     val nblocks = ((h.nbytes.toLong + blocksize - 1) / blocksize).toInt
     val out = new Array[Byte](h.nbytes)
     val doShuffle = (h.flags & FlagShuffle) != 0
+    val leftover = h.nbytes % blocksize
     var k = 0
     while (k < nblocks) {
       val neblock = math.min(blocksize, h.nbytes - k * blocksize)
-      val bstart = readLE(frame, 16 + 4 * k)
-      val csize = readLE(frame, bstart)
-      val block =
-        if (csize == neblock) java.util.Arrays.copyOfRange(frame, bstart + 4, bstart + 4 + neblock)
+      val split = (h.flags & FlagDontSplit) == 0 && h.typesize > 1 && h.typesize <= MaxSplits &&
+        blocksize / h.typesize >= MinSplitBuffer && !(k == nblocks - 1 && leftover > 0)
+      val nsplits = if (split) h.typesize else 1
+      val splitLen = neblock / nsplits
+      val block = new Array[Byte](neblock)
+      var src = readLE(frame, 16 + 4 * k)
+      var j = 0
+      while (j < nsplits) {
+        val csize = readLE(frame, src)
+        if (csize == splitLen) System.arraycopy(frame, src + 4, block, j * splitLen, splitLen)
         else {
-          val dst = new Array[Byte](neblock)
-          val n = Zstd.decompressByteArray(dst, 0, neblock, frame, bstart + 4, csize)
-          require(n == neblock, s"zstd decoded $n of expected $neblock bytes")
-          dst
+          val n = Zstd.decompressByteArray(block, j * splitLen, splitLen, frame, src + 4, csize)
+          require(n == splitLen, s"zstd decoded $n of expected $splitLen bytes")
         }
+        src += 4 + csize
+        j += 1
+      }
       val plain = if (doShuffle) unshuffle(block, h.typesize) else block
       System.arraycopy(plain, 0, out, k * blocksize, neblock)
       k += 1

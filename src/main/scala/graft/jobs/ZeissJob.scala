@@ -70,16 +70,25 @@ object ZeissJob {
 
   private def parseWith(mapper: ObjectMapper, json: String): Settings = {
     val n = mapper.readTree(json)
-    def arr3(node: JsonNode, default: Array[Int]): Array[Int] =
-      if (node == null) default
-      else { val it = node.elements(); Array(it.next().asInt, it.next().asInt, it.next().asInt) }
+    // a [z, y, x] triple of positive ints; anything else fails naming the field
+    def arr3(field: String, default: Array[Int]): Array[Int] = n.get(field) match {
+      case null => default
+      case node =>
+        require(node.isArray && node.size == 3,
+          s"$field must be an array of 3 positive integers, got $node")
+        val a = Array.tabulate(3)(i => node.get(i).asInt)
+        require(a.forall(_ > 0), s"$field entries must be > 0, got $node")
+        a
+    }
+    val downsampleLevels = if (n.has("downsample_levels")) n.get("downsample_levels").asInt else 4
+    require(downsampleLevels >= 1, s"downsample_levels must be >= 1, got $downsampleLevels")
     Settings(
       inputSource = n.get("input_source").asText(),
       outputDirectory = n.get("output_directory").asText(),
       s3Location = Option(n.get("s3_location")).filter(!_.isNull).map(_.asText()),
-      chunkSize = arr3(n.get("chunk_size"), Array(128, 128, 128)),
-      scaleFactor = arr3(n.get("scale_factor"), Array(2, 2, 2)),
-      downsampleLevels = if (n.has("downsample_levels")) n.get("downsample_levels").asInt else 4,
+      chunkSize = arr3("chunk_size", Array(128, 128, 128)),
+      scaleFactor = arr3("scale_factor", Array(2, 2, 2)),
+      downsampleLevels = downsampleLevels,
       compressorLevel = if (n.has("compressor_level")) n.get("compressor_level").asInt else 3,
       targetSizeMb = if (n.has("target_size_mb")) n.get("target_size_mb").asLong else 19200L,
       maxConcurrentStacks =
@@ -138,23 +147,25 @@ object ZeissJob {
                   else graft.sources.czi.CziSourceShuffled.scan(spark, srcPath, vol, idx))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    ZarrIO.writeMetadata(outRoot, vol, settings.downsampleLevels, voxelZyx,
-      settings.scaleFactor.toSeq, chNames, Some(Seq(0.0, 0.0, 0.0)),
-      compressed = settings.compress, clevel = settings.compressorLevel)
-    // superblock-sized write batching (reference X4, target_size_mb)
-    ZarrIO.writeChunksBatched(level0, outRoot, vol, settings.targetSizeMb,
-      settings.compressorLevel, settings.compress)
-    // write level k, then drop level k-1's cache — peak storage is two
-    // adjacent levels, not the whole pyramid (reference X6 economy)
-    var prev: org.apache.spark.sql.Dataset[graft.core.ZarrChunk] = level0
-    Pyramid.levels(spark, level0, vol, settings.downsampleLevels, settings.scaleFactor)
-      .foreach { case (lvlVol, ds) =>
-        ZarrIO.writeChunksBatched(ds, outRoot, lvlVol, settings.targetSizeMb,
-          settings.compressorLevel, settings.compress)
-        prev.unpersist()
-        prev = ds
+    try {
+      ZarrIO.writeMetadata(outRoot, vol, settings.downsampleLevels, voxelZyx,
+        settings.scaleFactor.toSeq, chNames, Some(Seq(0.0, 0.0, 0.0)),
+        compressed = settings.compress, clevel = settings.compressorLevel)
+      // superblock-sized write batching (reference X4, target_size_mb)
+      ZarrIO.writeChunksBatched(level0, outRoot, vol, settings.targetSizeMb,
+        settings.compressorLevel, settings.compress)
+      // levels 1..n-1 in one more job: one map pass over the cached level 0
+      // and one exchange (the reference re-reads each level from zarr,
+      // czi_to_zarr.py:623-635). Level 0 is the only level cached, unless
+      // an unaligned chunk/factor config takes the per-level fallback,
+      // whose levels are released here too.
+      if (settings.downsampleLevels > 1) {
+        val upper = Pyramid.levelsFusedAll(spark, level0, vol,
+          settings.downsampleLevels, settings.scaleFactor)
+        try ZarrIO.write(upper.chunks, outRoot, vol, settings.compressorLevel, settings.compress)
+        finally upper.release()
       }
-    prev.unpersist()
+    } finally level0.unpersist()
     vol
   }
 

@@ -329,7 +329,8 @@ object Pyramid {
 
   /** Full pyramid: levels 1..n-1, each computed from the previous level
     * (reference X6, `czi_to_zarr.py:623-635`) with persist() between
-    * levels replacing the reference's zarr re-read. Returns levels 1.. */
+    * levels replacing the reference's zarr re-read. Returns levels 1..;
+    * the caller unpersists them. */
   def levels(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
              nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)): Seq[(Volume, Dataset[ZarrChunk])] = {
     var cur = (vol, level0)
@@ -342,36 +343,54 @@ object Pyramid {
     out.result()
   }
 
+  /** Levels 1..n-1 of a pyramid as one Dataset (each chunk carries its
+    * level). `cached` holds the per-level Datasets the unaligned fallback
+    * persisted — empty on the fused path; [[release]] unpersists them
+    * once `chunks` has been consumed. */
+  final case class UpperLevels(vols: Seq[Volume], chunks: Dataset[ZarrChunk],
+                               cached: Seq[Dataset[ZarrChunk]]) {
+    def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** True when every level-k piece of an input chunk has integer size
+    * chunk/f^k for k < nLevels, i.e. chunk % f^(nLevels-1) == 0 on every
+    * spatial axis — the condition under which [[levelsFusedAll]] fuses. */
+  def fusable(chunk: Array[Int], factorZyx: Array[Int], nLevels: Int): Boolean =
+    (2 to 4).forall { i =>
+      val fPow = math.pow(factorZyx(i - 2).toDouble, (nLevels - 1).toDouble).toLong
+      fPow > 0 && chunk(i) % fPow == 0
+    }
+
   /** FUSED all-levels pyramid: ONE map pass emits every level's pieces
     * chunk-locally, ONE shuffle (keyed by (level, out-chunk)) assembles
     * them — collapsing `levels`'s n-1 shuffles + n-1 persists (12
     * stages for z1's 4-level pyramid) into map + single exchange.
+    * Callers: [[graft.jobs.ZeissJob.convertStack]] (every stack's levels
+    * 1..n-1, written with one sink call) and query z1.
     *
     * Validity: level-(k+1) windows must never cross level-k piece
     * boundaries. Pieces from one input chunk have size chunk/f^k, and
     * windows start at multiples of f, so the fused recursion equals the
     * assemble-then-downsample sequence iff chunk % f^(nLevels-1) == 0
-    * on every spatial axis (true for the reference's 128^3 / x2 config
-    * and z1's 32^3 / 4 levels; PyramidFusedSpec pins byte-equality vs
-    * [[levels]] including ceil-edge chunks). Unaligned configs fall
-    * back to [[levels]] — correctness never depends on the fast path.
+    * on every spatial axis ([[fusable]]; true for the reference's
+    * 128^3 / x2 config and z1's 32^3 / 4 levels; PyramidFusedSpec pins
+    * byte-equality vs [[levels]] including ceil-edge chunks). Unaligned
+    * configs fall back to [[levels]], whose persisted levels the caller
+    * frees with [[UpperLevels.release]] — correctness never depends on
+    * the fast path.
     *
     * Scale: the exchange carries sum over k of 1/f^3k of the input
     * (~14.5% for f=2) in one stage — at 100 TB that is one 14.5 TB
     * shuffle instead of three 12.5/1.6/0.2 TB stages with a persist
     * barrier between each; map output is grid-uniform, no skew. */
   def levelsFusedAll(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
-                     nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)):
-      (Seq[Volume], Dataset[ZarrChunk]) = {
+                     nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)): UpperLevels = {
     import spark.implicits._
+    require(nLevels >= 2, s"a pyramid above level 0 needs nLevels >= 2, got $nLevels")
     val nHalvings = nLevels - 1
-    val aligned = (2 to 4).forall { i =>
-      val fPow = math.pow(factorZyx(i - 2).toDouble, nHalvings.toDouble).toLong
-      fPow > 0 && vol.chunk(i) % fPow == 0
-    }
-    if (!aligned) {
+    if (!fusable(vol.chunk, factorZyx, nLevels)) {
       val seq = levels(spark, level0, vol, nLevels, factorZyx)
-      return (seq.map(_._1), seq.map(_._2).reduce(_ union _))
+      return UpperLevels(seq.map(_._1), seq.map(_._2).reduce(_ union _), seq.map(_._2))
     }
     val vols = Iterator.iterate(vol)(_.downsampled(factorZyx))
       .drop(1).take(nHalvings).toSeq
@@ -433,6 +452,6 @@ object Pyramid {
         }
         ZarrChunk(stacks(lvl - 1), lvlIds(lvl - 1), t, c, gz.toInt, gy.toInt, gx.toInt, cs, buf)
       }
-    (vols, out)
+    UpperLevels(vols, out, Seq.empty)
   }
 }

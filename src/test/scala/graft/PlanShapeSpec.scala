@@ -476,10 +476,13 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p16.contains("BroadcastHashJoin [word#"), p16)
   }
 
-  test("t21: corpus aggregates once into (doc, bigram) counts; margins broadcast") {
+  test("t21: one doc_id repartition serves both corpus aggregates; margins broadcast") {
     val p = plan("t21_perplexity")
-    // the single corpus-scale exchange is the (doc_id, w1, w2) rollup
-    assert("hashpartitioning\\(doc_id#\\d+L?, w1#".r.findFirstIn(p).isDefined, p)
+    // the single corpus-scale exchange is the keyed repartition(doc_id):
+    // it satisfies the (doc_id, w1, w2) aggregate and the per-doc rollup
+    assert("hashpartitioning\\(doc_id#\\d+L?, \\d+\\), REPARTITION_BY_COL".r.findAllIn(p).size == 1, p)
+    // so neither aggregate adds its own (doc_id, w1) exchange
+    assert("hashpartitioning\\(doc_id#\\d+L?, w1#[^\\n]*ENSURE_REQUIREMENTS".r.findFirstIn(p).isEmpty, p)
     // c1 margin and the vocab scalar ride broadcasts, not joins-by-shuffle
     assert("BroadcastExchange".r.findAllIn(p).size >= 2, p)
     assert(!p.toLowerCase.contains("cartesianproduct"), p)

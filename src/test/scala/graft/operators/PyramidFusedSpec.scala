@@ -24,10 +24,13 @@ class PyramidFusedSpec extends AnyFunSuite {
   private def assertEqualLevels(vol: Volume, nLevels: Int): Unit = {
     val seq = Pyramid.levels(spark, SyntheticStack.generate(spark, vol), vol, nLevels)
     val want = keyed(seq.flatMap(_._2.collect()).toArray)
-    val (vols, all) = Pyramid.levelsFusedAll(
+    seq.foreach(_._2.unpersist())
+    val fused = Pyramid.levelsFusedAll(
       spark, SyntheticStack.generate(spark, vol), vol, nLevels)
-    assert(vols.map(_.shape.toSeq) == seq.map(_._1.shape.toSeq))
-    val got = keyed(all.collect())
+    assert(fused.vols.map(_.shape.toSeq) == seq.map(_._1.shape.toSeq))
+    val got = keyed(fused.chunks.collect())
+    fused.release()
+    assert(fused.cached.isEmpty == Pyramid.fusable(vol.chunk, Array(2, 2, 2), nLevels))
     assert(got.keySet == want.keySet, "chunk grid differs")
     got.foreach { case (k, v) =>
       assert(v == want(k), s"chunk $k differs between fused and sequential")
@@ -50,8 +53,8 @@ class PyramidFusedSpec extends AnyFunSuite {
     // mis-place voxels along at least two axes (ADVICE r15, z1)
     val vol = Volume("fnc", 0, Array(1L, 1L, 32L, 64L, 16L), Array(1, 1, 16, 32, 8))
     assertEqualLevels(vol, 3)
-    val (_, all) = Pyramid.levelsFusedAll(
-      spark, SyntheticStack.generate(spark, vol), vol, 3)
+    val all = Pyramid.levelsFusedAll(
+      spark, SyntheticStack.generate(spark, vol), vol, 3).chunks
     // level 1 = floor-mean over each 2x2x2 window of the synthetic
     // voxel function (the z1 oracle's semantics); checking the GLOBAL
     // coordinates end-to-end catches any cross-axis extent mixup

@@ -79,6 +79,33 @@ class CziSpec extends AnyFunSuite {
     }
   }
 
+  test("settings validation rejects bad levels, sizes and arrays, naming the field") {
+    def parse(extra: String) = ZeissJob.parseSettings(
+      s"""{"input_source":"/a","output_directory":"/b"$extra}""")
+    def rejects(extra: String, field: String): Unit = {
+      val e = intercept[IllegalArgumentException](parse(extra))
+      assert(e.getMessage.contains(field), s"$extra: ${e.getMessage}")
+    }
+    rejects(""","downsample_levels":0""", "downsample_levels")
+    rejects(""","downsample_levels":-2""", "downsample_levels")
+    rejects(""","chunk_size":[128,0,128]""", "chunk_size")
+    rejects(""","chunk_size":[128,128,-1]""", "chunk_size")
+    rejects(""","scale_factor":[2,0,2]""", "scale_factor")
+    // arity: short arrays used to throw NoSuchElementException, long ones
+    // were silently truncated
+    rejects(""","chunk_size":[64,64]""", "chunk_size")
+    rejects(""","scale_factor":[2,2,2,2]""", "scale_factor")
+    rejects(""","chunk_size":64""", "chunk_size")
+    // the env source shares the validation path
+    val e = intercept[IllegalArgumentException](ZeissJob.settingsFromEnv(Map(
+      "TRANSFORMATION_JOB_INPUT_SOURCE" -> "/a", "TRANSFORMATION_JOB_OUTPUT_DIRECTORY" -> "/b",
+      "TRANSFORMATION_JOB_DOWNSAMPLE_LEVELS" -> "0")))
+    assert(e.getMessage.contains("downsample_levels"))
+    // the smallest valid values pass
+    val ok = parse(""","downsample_levels":1,"chunk_size":[1,1,1],"scale_factor":[1,1,1]""")
+    assert(ok.downsampleLevels == 1 && ok.chunkSize.toSeq == Seq(1, 1, 1))
+  }
+
   test("CZI index parse: shape, pixel type, entries") {
     val dir = Files.createTempDirectory("czi").toString
     val path = s"$dir/t.czi"
