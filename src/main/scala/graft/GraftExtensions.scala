@@ -1,47 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Spark extensions entry point: registers the engine's custom SQL
   * functions at session build time, so cluster users get them via
   * `--conf spark.sql.extensions=graft.GraftExtensions` without any code.
+  * It walks [[functions.sqlFunctions]], the same table
+  * [[functions.registerAll]] walks for local sessions.
   *
   * (The Zarr source/sink needs no extension — it registers through the
   * DataSourceRegister service loader.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    def info(name: String): ExpressionInfo =
-      new ExpressionInfo(classOf[GraftExtensions].getName, name)
-    ext.injectFunction((FunctionIdentifier("vector_dot"), info("vector_dot"),
-      (exprs: Seq[Expression]) => functions.VectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("nearest_centroid"), info("nearest_centroid"),
-      (exprs: Seq[Expression]) => functions.NearestCentroid(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("id_pairs"), info("id_pairs"),
-      (exprs: Seq[Expression]) => functions.IdPairs(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("zorder_key"), info("zorder_key"),
-      (exprs: Seq[Expression]) => functions.ZorderKey(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("blosc_compress"), info("blosc_compress"),
-      (exprs: Seq[Expression]) => functions.BloscCompress(exprs.head, 2, 3)))
-    ext.injectFunction((FunctionIdentifier("blosc_decompress"), info("blosc_decompress"),
-      (exprs: Seq[Expression]) => functions.BloscDecompress(exprs.head)))
-    // same bloom surface graft.functions.registerAll exposes on local
-    // sessions (decontamination prefilters — see d10/dropBlocked)
-    ext.injectFunction((FunctionIdentifier("bloom_filter_agg"), info("bloom_filter_agg"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c)       => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-        case Seq(c, n)    => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
-        case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
-        case other => throw new IllegalArgumentException(
-          s"bloom_filter_agg takes 1-3 arguments, got ${other.size}")
-      }))
-    ext.injectFunction((FunctionIdentifier("hll_estimate"), info("hll_estimate"),
-      (exprs: Seq[Expression]) => functions.HllSketchAgg(exprs.head)
-        .toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("might_contain"), info("might_contain"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
 }

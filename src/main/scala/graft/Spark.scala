@@ -75,7 +75,7 @@ object Spark {
         s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark) // vector_dot, blosc_(de)compress SQL names
+    graft.functions.registerAll(spark) // the engine's SQL function table
     spark
   }
 }

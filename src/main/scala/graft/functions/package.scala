@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftbridge.ColumnBridge.{aggregate, column, expression}
 import org.apache.spark.sql.functions.sqrt
 
 /** Column-level API over the custom expressions + SQL registration. */
@@ -102,49 +103,44 @@ package object functions {
   def blosc_decompress(c: Column): Column =
     column(BloscDecompress(expression(c)))
 
-  /** Register the SQL names (`vector_dot`, `blosc_compress`,
-    * `blosc_decompress`, `gmean`) on a session. */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vector_dot",
-      exprs => VectorDot(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("md5_bits",
-      exprs => Md5Bits(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("nearest_centroid",
-      exprs => NearestCentroid(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("id_pairs",
-      exprs => IdPairs(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("zorder_key",
-      exprs => ZorderKey(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("word_shingle_hashes",
-      exprs => WordShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(), 15), "scala_udf")
-    reg.createOrReplaceTempFunction("char_window_hashes",
-      exprs => CharWindowHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(), 15), "scala_udf")
-    reg.createOrReplaceTempFunction("blosc_compress",
-      exprs => BloscCompress(exprs.head, 2, 3), "scala_udf")
-    reg.createOrReplaceTempFunction("blosc_decompress",
-      exprs => BloscDecompress(exprs.head), "scala_udf")
-    // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
-    // own runtime join filters but does not register SQL names for them.
-    // Exposed here, they are the canonical 100 TB decontamination
-    // prefilter: a few-MB bloom of the blocklist side replaces an exact
-    // broadcast set, and corpus rows die map-side before any join.
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      {
+  /** The engine's SQL functions as one (name, builder) table, walked by
+    * both [[registerAll]] (local sessions) and [[graft.GraftExtensions]]
+    * (`spark.sql.extensions` on a cluster), so the two entry points expose
+    * the same names. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+    Seq(
+      "vector_dot" -> (e => VectorDot(e(0), e(1))),
+      "md5_bits" -> (e => Md5Bits(e(0), intArg(e(1)))),
+      "nearest_centroid" -> (e => NearestCentroid(e(0), e(1))),
+      "id_pairs" -> (e => IdPairs(e.head)),
+      "sorted_intersect_count" -> (e => SortedIntersectCount(e(0), e(1))),
+      "zorder_key" -> (e => ZorderKey(e(0), e(1))),
+      "word_shingle_hashes" -> (e => WordShingleHashes(e(0), intArg(e(1)), 15)),
+      "char_window_hashes" -> (e => CharWindowHashes(e(0), intArg(e(1)), 15)),
+      "blosc_compress" -> (e => BloscCompress(e.head, 2, 3)),
+      "blosc_decompress" -> (e => BloscDecompress(e.head)),
+      // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
+      // own runtime join filters but does not register SQL names for them.
+      // Exposed here, they are the canonical 100 TB decontamination
+      // prefilter: a few-MB bloom of the blocklist side replaces an exact
+      // broadcast set, and corpus rows die map-side before any join.
+      "bloom_filter_agg" -> {
         case Seq(c)       => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
         case Seq(c, n)    => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n)
         case Seq(c, n, b) => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, n, b)
         case other => throw new IllegalArgumentException(
           s"bloom_filter_agg takes 1-3 arguments, got ${other.size}")
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("might_contain",
-      exprs => new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1)),
-      "scala_udf")
-    spark.udf.register("gmean", org.apache.spark.sql.functions.udaf(new GeoMean))
+      },
+      "might_contain" -> (e =>
+        new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(e(0), e(1))),
+      "hll_estimate" -> (e => HllSketchAgg(e.head).toAggregateExpression()),
+      "gmean" -> (e => aggregate("gmean", new GeoMean, org.apache.spark.sql.Encoders.DOUBLE, e)))
   }
+
+  /** Register every [[sqlFunctions]] name on a session. */
+  def registerAll(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 }

@@ -1,5 +1,6 @@
 package graft.io.zarr
 
+import java.io.FileNotFoundException
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -18,6 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Blosc, ChunkGrid}
+import graft.io.{GridRange, GridScan, GridScanBuilder}
 
 /** Zarr v2 DataSource V2: `spark.read.format("zarr")` over a chunk store
   * and `df.write.format("zarr")` into one — the engine's array storage as
@@ -27,15 +29,17 @@ import graft.core.{Blosc, ChunkGrid}
   *
   * Options: `path` (store root), `stack`, `level`.
   *
-  * Read: one InputPartition per chunk-grid slab — planned from `.zarray`
-  * arithmetic, never by listing (at 100 TB the store has billions of
-  * chunk files; listing is the scalability bug the plan avoids). Each
-  * reader opens only its own chunk files; missing files yield
-  * fill-value (zeros) chunks, matching Zarr semantics.
+  * Read: one InputPartition per range of chunks — planned from `.zarray`
+  * arithmetic by the shared [[graft.io.GridScan]] planner, never by
+  * listing (at 100 TB the store has billions of chunk files; listing is
+  * the scalability bug the plan avoids). Each reader opens only its own
+  * chunk files; missing files yield fill-value (zeros) chunks, matching
+  * Zarr semantics. This is also how [[ZarrIO.readChunks]] reads.
   *
   * Write: each task Blosc-compresses and atomically renames its own
-  * chunk files (lock-free, reference X8); commit is metadata-free
-  * because chunk placement is deterministic by coordinates.
+  * chunk files ([[ZarrIO.commitChunk]], lock-free, reference X8); commit
+  * is metadata-free because chunk placement is deterministic by
+  * coordinates.
   */
 class ZarrDataSource extends TableProvider with DataSourceRegister {
 
@@ -84,239 +88,27 @@ class ZarrTable(props: Map[String, String]) extends Table with SupportsRead with
       props.get("stack"), props.get("level").map(_.toInt))
 }
 
-final case class ZarrInputPartition(firstChunk: Long, lastChunk: Long) extends InputPartition
-
-/** Pushes chunk-coordinate predicates into the grid arithmetic and prunes
-  * unread columns.
-  *
-  * At 100 TB a store has ~10^8 chunk files; a query over one z-slab must
-  * plan only that slab's chunks, not enumerate-then-filter the full grid.
-  * Because chunk placement is pure arithmetic, an accepted coordinate
-  * range shrinks `planInputPartitions` itself — the pruning happens before
-  * any task launches, the Zarr analogue of parquet partition pruning.
-  * Column pruning matters just as much: a scan that doesn't need `data`
-  * (counts, coordinate joins, grid audits) never opens a chunk file.
-  */
+/** Zarr absorbs filters on every axis: a partition is a range of single
+  * chunks, each with its own (t, c, z, y, x). */
 class ZarrScanBuilder(root: String, stack: String, level: Int)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  import org.apache.spark.sql.sources._
-  import org.apache.spark.sql.connector.expressions.NamedReference
-  import org.apache.spark.sql.connector.expressions.aggregate._
-
-  private val axes = Seq("t", "c", "z", "y", "x")
-  // per-axis inclusive coordinate bounds, refined by each accepted filter
-  private val lo = Array.fill(5)(0L)
-  private val hi = Array.fill(5)(Long.MaxValue)
-  private var pushed = Array.empty[Filter]
-  private var required: StructType = ZarrDataSource.chunkSchema
-  // complete aggregate pushdown: grouping axes + ops like ("count","") /
-  // ("min","z"); groupAxes empty = the ungrouped single-row case
-  private var aggOps: Option[(Seq[String], Seq[(String, String)])] = None
-
-  private def refine(ax: Int, l: Long, h: Long): Unit = {
-    lo(ax) = math.max(lo(ax), l)
-    hi(ax) = math.min(hi(ax), h)
-  }
-
-  private def asLong(v: Any): Option[Long] = v match {
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
-  /** Exactly-representable coordinate ranges are fully absorbed (no
-    * residual re-evaluation); anything else stays with Spark. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val residual = filters.filterNot { f =>
-      val accepted = f match {
-        case EqualTo(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), x, x); true }
-        case GreaterThan(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), x + 1, Long.MaxValue); true }
-        case GreaterThanOrEqual(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), x, Long.MaxValue); true }
-        case LessThan(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), Long.MinValue, x - 1); true }
-        case LessThanOrEqual(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), Long.MinValue, x); true }
-        case In(a, vs) if axes.contains(a) && vs.nonEmpty && vs.forall(asLong(_).isDefined) =>
-          // prune to the value envelope but keep the filter residual —
-          // the sub-grid is a superset of an In's point set
-          val xs = vs.map(asLong(_).get)
-          refine(axes.indexOf(a), xs.min, xs.max)
-          false
-        case _ => false
-      }
-      if (accepted) pushed :+= f
-      accepted
-    }
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve source column order; an empty projection (count(*)) keeps
-    // nothing and the reader emits empty rows
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(ZarrDataSource.chunkSchema.filter(f => keep.contains(f.name)))
-  }
-
-  /** COUNT(*) / MIN / MAX over chunk coordinates are grid arithmetic —
-    * answered from the driver-planned bounds with no IO at all, the
-    * "billions of chunk files, zero list calls" property taken to its
-    * endpoint. GROUP BY coordinate axes pushes down too: each group is a
-    * coordinate combination of the grouped axes, its count the product of
-    * the other axes' extents — still pure arithmetic, emitted without
-    * opening a single chunk file (group enumeration is range-partitioned,
-    * so even a billion-group axis stays distributed). Only exact cases
-    * are accepted (every aggregate and every grouping column
-    * translatable; residual-free bounds — an In's sub-grid superset is
-    * pruning-only and never reaches here as agg pushdown runs on the
-    * post-filter plan). */
-  private def translate(agg: Aggregation): Option[(Seq[String], Seq[(String, String)])] = {
-    def ax(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
-      case f: NamedReference if f.fieldNames.length == 1 && axes.contains(f.fieldNames()(0)) =>
-        Some(f.fieldNames()(0))
-      case _ => None
-    }
-    val groups = agg.groupByExpressions.toSeq.map(ax)
-    val ops = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(("count", ""))
-      case m: Min => ax(m.column).map(("min", _))
-      case m: Max => ax(m.column).map(("max", _))
-      case _ => None
-    }
-    if (ops.forall(_.isDefined) && groups.forall(_.isDefined) &&
-        groups.flatten.distinct.size == groups.size)
-      Some((groups.flatten, ops.map(_.get)))
-    else None
-  }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    translate(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    translate(agg) match {
-      case Some(ops) => aggOps = Some(ops); true
-      case None => false
-    }
-
+    extends GridScanBuilder(GridScan.axes.toSet) {
   override def build(): Scan = new ZarrScan(root, stack, level, lo, hi, required, aggOps)
 }
 
 class ZarrScan(root: String, stack: String, level: Int,
                lo: Array[Long], hi: Array[Long], required: StructType,
-               aggOps: Option[(Seq[String], Seq[(String, String)])] = None)
-    extends Scan with Batch {
+               aggOps: Option[GridScan.AggOps])
+    extends GridScan("ZarrScan", s"$root/$stack/$level", lo, hi, required, aggOps) {
   // driver-side: only the tiny .zarray descriptor is read; the chunk grid
   // stays arithmetic
   private lazy val meta = ZarrIO.readZarray(root, stack, level)
-  private lazy val (shape, chunk, compressed) = (meta.shape, meta.chunk, meta.compressed)
-  private lazy val grid = ChunkGrid.gridShape(shape, chunk)
-  // the scanned sub-grid: pushed bounds clamped to the real grid
-  private lazy val base = Array.tabulate(5)(d => math.max(0L, lo(d)))
-  private lazy val ext = Array.tabulate(5)(d =>
-    math.max(0L, math.min(grid(d) - 1, hi(d)) - base(d) + 1))
+  override protected lazy val grid: Array[Long] = ChunkGrid.gridShape(meta.shape, meta.chunk)
 
-  override def readSchema(): StructType = aggOps match {
-    case Some((groups, ops)) => StructType(
-      groups.map(g => StructField(g, IntegerType, nullable = false)) ++
-        ops.zipWithIndex.map {
-          case (("count", _), i) => StructField(s"agg$i", LongType, nullable = false)
-          case ((op, ax), i) => StructField(s"agg$i", IntegerType, nullable = true)
-        })
-    case None => required
-  }
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val bounds = (0 until 5).collect {
-      case d if lo(d) > 0L || hi(d) != Long.MaxValue =>
-        s"${Seq("t", "c", "z", "y", "x")(d)}=[${lo(d)}..${if (hi(d) == Long.MaxValue) "*" else hi(d)}]"
-    }
-    val agg = aggOps.map { case (groups, ops) =>
-      val g = if (groups.isEmpty) "" else groups.mkString(" groupBy=", ",", "")
-      " agg=" + ops.map {
-        case ("count", _) => "count(*)"
-        case (op, ax) => s"$op($ax)"
-      }.mkString(",") + g
-    }.getOrElse("")
-    s"ZarrScan($root/$stack/$level${if (bounds.isEmpty) "" else bounds.mkString(" ", ",", "")} cols=${required.fieldNames.mkString(",")}$agg)"
-  }
+  override protected def planData(): Array[InputPartition] = GridScan.ranged(ext.product)
 
-  private def ranged(total: Long): Array[InputPartition] = {
-    if (total == 0L) return Array.empty
-    val targetPartitions = math.min(total, 256L)
-    val per = ChunkGrid.ceilDiv(total, targetPartitions)
-    (0L until total by per)
-      .map(s => ZarrInputPartition(s, math.min(s + per, total) - 1))
-      .toArray
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = aggOps match {
-    // ungrouped pushed aggregate: one arithmetic row, one no-IO partition
-    case Some((groups, _)) if groups.isEmpty => Array(ZarrInputPartition(0L, 0L))
-    // grouped: range-partition the group space (arithmetic rows, no IO);
-    // an empty sub-grid has no groups at all
-    case Some((groups, _)) =>
-      val axesN = Seq("t", "c", "z", "y", "x")
-      if (ext.exists(_ == 0L)) Array.empty
-      else ranged(groups.map(g => ext(axesN.indexOf(g))).product)
-    case None => ranged(ext.product)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = aggOps match {
-    case Some((groups, ops)) => ZarrAggReaderFactory(groups, ops, base, ext)
-    case None => ZarrReaderFactory(root, stack, level, shape, chunk, compressed,
-      meta.dtype.itemSize, base, ext, required.fieldNames,
-      graft.core.HadoopConf.snapshot())
-  }
-}
-
-/** Emits pre-aggregated rows for a pushed COUNT/MIN/MAX: the chunk count
-  * is the (per-group) sub-grid volume, coordinate extrema are its corner
-  * coordinates. Grouped aggregates enumerate the grouped axes' coordinate
-  * combinations for this partition's [first..last] slice of the group
-  * space. No filesystem access at all. */
-final case class ZarrAggReaderFactory(groups: Seq[String], ops: Seq[(String, String)],
-                                      base: Array[Long], ext: Array[Long])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val axes = Seq("t", "c", "z", "y", "x")
-      private val gDims = groups.map(axes.indexOf).toArray
-      private val gExt = gDims.map(ext(_))
-      // per-group chunk count: product of the NON-grouped extents
-      private val perGroup = (0 until 5)
-        .filterNot(gDims.contains).map(ext(_)).product
-      private val p = partition.asInstanceOf[ZarrInputPartition]
-      private var cur = if (groups.isEmpty) -1L else p.firstChunk - 1
-      private val lastG = if (groups.isEmpty) 0L else p.lastChunk
-      override def next(): Boolean = { cur += 1; cur <= lastG }
-      override def get(): InternalRow = {
-        // row-major decompose of the group index over the grouped axes
-        val combo = new Array[Long](gDims.length)
-        var rem = cur
-        var d = gDims.length - 1
-        while (d >= 0) { combo(d) = base(gDims(d)) + rem % gExt(d); rem /= gExt(d); d -= 1 }
-        val n = if (groups.isEmpty) ext.product else perGroup
-        val aggVals = ops.map {
-          case ("count", _) => n
-          case (op, ax) if n == 0L => null // empty sub-grid: min/max of no rows
-          case (op, ax) =>
-            val dim = axes.indexOf(ax)
-            val gi = gDims.indexOf(dim)
-            if (gi >= 0) combo(gi).toInt // grouped axis: the group's value
-            else if (op == "min") base(dim).toInt
-            else (base(dim) + ext(dim) - 1).toInt
-        }
-        InternalRow.fromSeq(combo.map(_.toInt: Any).toIndexedSeq ++ aggVals)
-      }
-      override def close(): Unit = ()
-    }
+  override protected def dataReaderFactory(): PartitionReaderFactory =
+    ZarrReaderFactory(root, stack, level, meta.shape, meta.chunk, meta.compressed,
+      meta.dtype.itemSize, base, ext, required.fieldNames, graft.core.HadoopConf.snapshot())
 }
 
 final case class ZarrReaderFactory(root: String, stack: String, level: Int,
@@ -326,9 +118,9 @@ final case class ZarrReaderFactory(root: String, stack: String, level: Int,
                                    cols: Array[String], hconf: Array[(String, String)])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ZarrInputPartition]
+    val p = partition.asInstanceOf[GridRange]
     new ZarrPartitionReader(root, stack, level, shape, chunk, compressed, itemSize,
-      base, ext, cols, p.firstChunk, p.lastChunk, hconf)
+      base, ext, cols, p.first, p.last, hconf)
   }
 }
 
@@ -341,9 +133,32 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
 
   private lazy val fs =
     new Path(root).getFileSystem(graft.core.HadoopConf.restore(hconf))
-  private val needData = cols.contains("data")
   private var cur = first - 1
   private var row: InternalRow = _
+
+  /** The decoded chunk at `p`, or the fill-value (zeros) chunk when no
+    * file exists. `open` makes the one metadata request (a HEAD on object
+    * stores); a missing file is its FileNotFoundException, not a probe. */
+  private def readChunk(p: Path, cs: Array[Int]): Array[Byte] = {
+    val expected = cs.product * itemSize
+    val stored =
+      try {
+        val in = fs.open(p)
+        try in.readAllBytes() finally in.close()
+      } catch { case _: FileNotFoundException => null }
+    if (stored == null) new Array[Byte](expected)
+    else try {
+      val raw = if (compressed) Blosc.decompress(stored) else stored
+      require(raw.length == expected, s"${raw.length} bytes, expected $expected")
+      raw
+    } catch {
+      // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
+      // a bare frame/length error from deep inside the codec is
+      // undebuggable when a million tasks each read thousands of files
+      case e: Exception => throw new IllegalStateException(
+        s"corrupt zarr chunk at $p: ${e.getMessage}", e)
+    }
+  }
 
   override def next(): Boolean = {
     cur += 1
@@ -352,21 +167,6 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
     val sub = ChunkGrid.chunkCoords(cur, ext)
     val coords = Array.tabulate(5)(d => base(d) + sub(d))
     val cs = ChunkGrid.clampedChunkShape(coords, shape, chunk)
-    // a data-free projection never touches the filesystem
-    lazy val raw = {
-      val p = new Path(s"$root/$stack/$level/${coords.mkString("/")}")
-      if (!fs.exists(p)) new Array[Byte](cs.product * itemSize) // fill_value=0 chunk
-      else {
-        val in = fs.open(p)
-        val buf = try {
-          val st = fs.getFileStatus(p)
-          val b = new Array[Byte](st.getLen.toInt)
-          in.readFully(0, b)
-          b
-        } finally in.close()
-        if (compressed) Blosc.decompress(buf) else buf
-      }
-    }
     val values: Array[Any] = cols.map {
       case "stack" => UTF8String.fromString(stack)
       case "level" => level
@@ -376,7 +176,8 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
       case "y" => coords(3).toInt
       case "x" => coords(4).toInt
       case "shape" => org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(cs)
-      case "data" => raw
+      // a data-free projection never touches the filesystem
+      case "data" => readChunk(new Path(s"$root/$stack/$level/${coords.mkString("/")}"), cs)
     }
     row = InternalRow.fromSeq(values.toIndexedSeq)
     true
@@ -513,12 +314,8 @@ class ZarrDataWriter(root: String, clevel: Int, defaultTypesize: Int,
     val (t, c, z, y, x) = (r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6))
     val data = r.getBinary(8)
     val (compressed, typesize) = codecFor(stack, level)
-    val dir = new Path(s"$root/$stack/$level/$t/$c/$z/$y")
-    val tmp = new Path(dir, s".tmp-$x-${java.util.UUID.randomUUID}")
     val payload = if (compressed) Blosc.compress(data, typesize, clevel) else data
-    val out = fs.create(tmp, true)
-    try out.write(payload) finally out.close()
-    if (!fs.rename(tmp, new Path(dir, x.toString))) fs.delete(tmp, false)
+    ZarrIO.commitChunk(fs, new Path(s"$root/$stack/$level/$t/$c/$z/$y/$x"), payload)
   }
 
   override def commit(): WriterCommitMessage = new WriterCommitMessage {}

@@ -5,7 +5,6 @@ import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.core.{Blosc, ChunkGrid, Volume, ZarrChunk}
 
@@ -24,9 +23,11 @@ import graft.core.{Blosc, ChunkGrid, Volume, ZarrChunk}
   *     and `s3a://` all work unchanged (replaces the reference's
   *     `aws s3 sync` subprocess, K6 `utils.py:142-205`);
   *   - exactly-once under task retry: write to a `.tmp-<attempt>` name
-  *     then atomic rename (SURVEY.md §7.5 #5);
-  *   - the source lists chunk files with Spark's distributed binaryFile
-  *     reader — no driver-side enumeration of the chunk grid.
+  *     then atomic rename (SURVEY.md §7.5 #5), in [[commitChunk]], the
+  *     one commit shared with the `format("zarr")` writer;
+  *   - reads go through the `format("zarr")` connector
+  *     ([[ZarrDataSource]]), which plans chunks from `.zarray` arithmetic
+  *     and never lists the store.
   */
 object ZarrIO {
 
@@ -88,7 +89,10 @@ object ZarrIO {
   }
 
   /** Executor-side chunk write: Blosc-compress and atomically place each
-    * chunk file. One row = one file; tasks never contend. */
+    * chunk file. One row = one file; tasks never contend. `typesize` is
+    * the shuffle stride and must match the store's dtype: a u8 or f32
+    * store byte-shuffled at stride 2 compresses worse and diverges from
+    * the reference's numcodecs config. */
   def writeChunks(ds: Dataset[ZarrChunk], root: String, clevel: Int = 3,
                   compress: Boolean = true, typesize: Int = 2): Unit = {
     // Configuration is not serializable: snapshot the session's effective
@@ -100,23 +104,29 @@ object ZarrIO {
       val conf = graft.core.HadoopConf.restore(hconf)
       var cachedFs: FileSystem = null
       it.foreach { ck =>
-        val dir = new Path(s"$root/${ck.stack}/${ck.level}/${ck.t}/${ck.c}/${ck.z}/${ck.y}")
+        val dst = new Path(s"$root/${ck.stack}/${ck.level}/${ck.t}/${ck.c}/${ck.z}/${ck.y}/${ck.x}")
         if (cachedFs == null) {
-          cachedFs = dir.getFileSystem(conf)
+          cachedFs = dst.getFileSystem(conf)
           cachedFs.setWriteChecksum(false)
         }
-        val f = cachedFs
-        val tmp = new Path(dir, s".tmp-${ck.x}-${java.util.UUID.randomUUID}")
-        val dst = new Path(dir, ck.x.toString)
         val payload = if (compress) Blosc.compress(ck.data, typesize, clevel) else ck.data
-        val out = f.create(tmp, true)
-        try out.write(payload) finally out.close()
-        if (!f.rename(tmp, dst)) {
-          // a concurrent attempt already committed this chunk — drop ours
-          f.delete(tmp, false)
-        }
+        commitChunk(cachedFs, dst, payload)
       }
     }
+  }
+
+  /** The one chunk-file commit of both sinks ([[writeChunks]] and the
+    * `format("zarr")` writer): write `payload` under a unique `.tmp-`
+    * sibling of `dst`, then rename it onto `dst`. The rename is the commit
+    * point, so a visible chunk file is always complete. A failed rename
+    * means a concurrent attempt already committed this chunk (with the
+    * same bytes — placement is deterministic by coordinates), so the loser
+    * deletes its tmp. */
+  def commitChunk(fs: FileSystem, dst: Path, payload: Array[Byte]): Unit = {
+    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}-${java.util.UUID.randomUUID}")
+    val out = fs.create(tmp, true)
+    try out.write(payload) finally out.close()
+    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
   }
 
   /** Crash-recovery sweep: delete orphaned `.tmp-*` files under `root`.
@@ -166,68 +176,15 @@ object ZarrIO {
     n
   }
 
-  /** Write one level end-to-end (metadata assumed written separately).
-    * The shuffle stride follows the volume's dtype — a u8 or f32 store
-    * byte-shuffled at stride 2 compresses worse and diverges from the
-    * reference's numcodecs config. */
-  def write(ds: Dataset[ZarrChunk], root: String, vol: Volume, clevel: Int = 3,
-            compress: Boolean = true): Unit =
-    writeChunks(ds, root, clevel, compress, vol.dtype.itemSize)
-
-  /** Superblock-batched write (reference K2/X4, `zarr_writer.py:188-213`):
-    * coalesce so each task owns ~targetMb of chunk data before writing.
-    * The reference batched to cap its dask graph; here it is purely an
-    * output-task-granularity knob (fewer, larger write tasks -> fewer
-    * filesystem round-trips on object stores). */
-  def writeChunksBatched(ds: Dataset[ZarrChunk], root: String, vol: Volume,
-                         targetMb: Long = 19200, clevel: Int = 3,
-                         compress: Boolean = true): Unit = {
-    val perTask = ChunkGrid.chunksPerTask(vol.chunk, targetMb * 1024 * 1024, vol.dtype.itemSize)
-    val bySize = ChunkGrid.ceilDiv(vol.numChunks, perTask)
-    // never batch below cluster parallelism: the reference's huge default
-    // (19.2 GB) targets TB-scale stacks; a small stack must still fan out
-    val floor = ds.sparkSession.sparkContext.defaultParallelism.toLong
-    val parts = math.max(1L, math.min(vol.numChunks, math.max(bySize, floor)))
-      .min(Int.MaxValue).toInt
-    val batched = if (parts < ds.rdd.getNumPartitions) ds.coalesce(parts) else ds
-    writeChunks(batched, root, clevel, compress, vol.dtype.itemSize)
-  }
-
-  /** Read a stack level back as a Dataset[ZarrChunk] (reference S6).
-    * Distributed: Spark's binaryFile source lists and reads chunk files
-    * across executors; coords parse from the path. */
+  /** Read a stack level back as a Dataset[ZarrChunk] (reference S6):
+    * the `format("zarr")` scan, planned from `.zarray` arithmetic with no
+    * listing. A chunk file absent from the store reads as fill-value
+    * zeros; a corrupt one fails its task naming the chunk path. */
   def readChunks(spark: SparkSession, root: String, stack: String, level: Int): Dataset[ZarrChunk] = {
     import spark.implicits._
-    val meta = readZarray(root, stack, level)
-    val (shape, chunk, compressed) = (meta.shape, meta.chunk, meta.compressed)
-    val itemSize = meta.dtype.itemSize
-    val lvl = s"$root/$stack/$level"
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(lvl)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (path, content) =>
-        // chunk coords are always the trailing t/c/z/y/x path segments —
-        // substring matching on stack/level would misparse when those
-        // names collide with coordinate values
-        val parts = path.split('/').takeRight(5)
-        try {
-          val Array(t, c, z, y, x) = parts.map(_.toInt)
-          val coords = Array(t.toLong, c.toLong, z.toLong, y.toLong, x.toLong)
-          val cs = ChunkGrid.clampedChunkShape(coords, shape, chunk)
-          val raw = if (compressed) Blosc.decompress(content) else content
-          require(raw.length == cs.product * itemSize,
-            s"${raw.length} bytes, expected ${cs.product * itemSize}")
-          ZarrChunk(stack, level, t, c, z, y, x, cs, raw)
-        } catch {
-          // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
-          // a bare frame/length error from deep inside the codec is
-          // undebuggable when a million tasks each read thousands of files
-          case e: Exception => throw new IllegalStateException(
-            s"corrupt zarr chunk at $path: ${e.getMessage}", e)
-        }
-      }
+    spark.read.format(classOf[ZarrDataSource].getName)
+      .option("path", root).option("stack", stack).option("level", level.toString)
+      .load().as[ZarrChunk]
   }
 
   final case class ZarrayMeta(shape: Array[Long], chunk: Array[Int],

@@ -24,7 +24,10 @@ import graft.sources.czi.CziSource
 object ZeissJob {
 
   /** Job settings mirroring the reference's pydantic model
-    * (`models.py:23-81`, defaults preserved). */
+    * (`models.py:23-81`, defaults preserved). The reference's
+    * `target_size_mb` (superblock write batching, `models.py:77-81`) has
+    * no field: a settings source that still carries it parses, and the
+    * value is ignored like any other key the job does not read. */
   final case class Settings(
       inputSource: String,
       outputDirectory: String,
@@ -34,7 +37,6 @@ object ZeissJob {
       downsampleLevels: Int = 4,
       compressorLevel: Int = 3,
       compress: Boolean = true,
-      targetSizeMb: Long = 19200, // reference models.py:77-81 job default
       // engine knob (no reference analogue — the reference converts stacks
       // strictly sequentially): how many stack conversions the driver
       // submits concurrently. Overlapping jobs keeps executors busy
@@ -90,7 +92,6 @@ object ZeissJob {
       scaleFactor = arr3("scale_factor", Array(2, 2, 2)),
       downsampleLevels = downsampleLevels,
       compressorLevel = if (n.has("compressor_level")) n.get("compressor_level").asInt else 3,
-      targetSizeMb = if (n.has("target_size_mb")) n.get("target_size_mb").asLong else 19200L,
       maxConcurrentStacks =
         if (n.has("max_concurrent_stacks")) n.get("max_concurrent_stacks").asInt else 4)
   }
@@ -151,9 +152,11 @@ object ZeissJob {
       ZarrIO.writeMetadata(outRoot, vol, settings.downsampleLevels, voxelZyx,
         settings.scaleFactor.toSeq, chNames, Some(Seq(0.0, 0.0, 0.0)),
         compressed = settings.compress, clevel = settings.compressorLevel)
-      // superblock-sized write batching (reference X4, target_size_mb)
-      ZarrIO.writeChunksBatched(level0, outRoot, vol, settings.targetSizeMb,
-        settings.compressorLevel, settings.compress)
+      // no superblock batching (reference X4, target_size_mb): the scan's
+      // spark.range already spreads level 0 over defaultParallelism
+      // partitions, and Spark has no task-graph limit to batch around
+      ZarrIO.writeChunks(level0, outRoot, settings.compressorLevel, settings.compress,
+        vol.dtype.itemSize)
       // levels 1..n-1 in one more job: one map pass over the cached level 0
       // and one exchange (the reference re-reads each level from zarr,
       // czi_to_zarr.py:623-635). Level 0 is the only level cached, unless
@@ -162,7 +165,8 @@ object ZeissJob {
       if (settings.downsampleLevels > 1) {
         val upper = Pyramid.levelsFusedAll(spark, level0, vol,
           settings.downsampleLevels, settings.scaleFactor)
-        try ZarrIO.write(upper.chunks, outRoot, vol, settings.compressorLevel, settings.compress)
+        try ZarrIO.writeChunks(upper.chunks, outRoot, settings.compressorLevel,
+          settings.compress, vol.dtype.itemSize)
         finally upper.release()
       }
     } finally level0.unpersist()
@@ -254,7 +258,7 @@ object ZeissJob {
     val stringFields = Set("input_source", "output_directory", "s3_location")
     val fields = Seq("input_source", "output_directory", "s3_location",
       "chunk_size", "scale_factor", "downsample_levels", "compressor_level",
-      "target_size_mb", "max_concurrent_stacks")
+      "max_concurrent_stacks")
     val root = M.createObjectNode()
     fields.foreach { f =>
       env.get("TRANSFORMATION_JOB_" + f.toUpperCase).foreach { v =>

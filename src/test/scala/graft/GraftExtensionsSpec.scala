@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("spark.sql.extensions=graft.GraftExtensions registers the SQL functions") {
-    // force a NEW session object (extensions apply at session build); the
-    // SparkContext is shared with other suites, so never stop() here
+  /** Runs `body` on a NEW session object (extensions apply at session
+    * build), with or without GraftExtensions. The SparkContext is shared
+    * with other suites, so never stop() here. */
+  private def withFreshSession[T](extensions: Boolean)(body: SparkSession => T): T = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
@@ -16,12 +17,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // .withExtensions = the same GraftExtensions.apply the
       // spark.sql.extensions conf invokes (conf form only loads on a
       // fresh JVM; these suites share one SparkContext)
-      val spark = SparkSession.builder()
+      val b = SparkSession.builder()
         .master("local[2]")
         .appName("graft-ext-test")
-        .withExtensions(new GraftExtensions)
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      body((if (extensions) b.withExtensions(new GraftExtensions) else b).getOrCreate())
+    } finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("spark.sql.extensions=graft.GraftExtensions registers the SQL functions") {
+    withFreshSession(extensions = true) { spark =>
       val d = spark.sql("SELECT vector_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").collect()(0).getDouble(0)
       assert(d == 11.0)
@@ -57,11 +67,32 @@ class GraftExtensionsSpec extends AnyFunSuite {
         """SELECT hll_estimate(CAST(conv(substr(md5(CAST(id AS STRING)), 1, 15), 16, 10) AS BIGINT)) AS e
           |FROM range(2000)""".stripMargin).collect()(0).getLong(0)
       assert(est > 1500 && est < 2500, est.toString)
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("GraftExtensions and functions.registerAll expose the same SQL function names") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
+    def added(s: SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet -- builtin
+    val viaExtensions = withFreshSession(extensions = true) { spark =>
+      // the typed-Aggregator builder resolves and evaluates through the
+      // extension path too: gmean(1, 4) = 2
+      val gm = spark.sql("SELECT round(gmean(x), 4) FROM VALUES (1.0D), (4.0D) AS t(x)")
+        .collect()(0).getDouble(0)
+      assert(gm == 2.0, gm.toString)
+      added(spark)
+    }
+    val viaRegisterAll = withFreshSession(extensions = false) { spark =>
+      functions.registerAll(spark)
+      added(spark)
+    }
+    assert(viaExtensions == viaRegisterAll,
+      s"extensions only: ${viaExtensions -- viaRegisterAll}; " +
+        s"registerAll only: ${viaRegisterAll -- viaExtensions}")
+    // the names the two registries used to disagree on
+    val drifted = Set("md5_bits", "sorted_intersect_count", "word_shingle_hashes",
+      "char_window_hashes", "gmean", "hll_estimate")
+    assert(drifted.subsetOf(viaExtensions), drifted -- viaExtensions)
   }
 }

@@ -2,8 +2,10 @@ package graft.io
 
 import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -16,6 +18,22 @@ import graft.sources.SyntheticStack
   * offline stand-in for an object store's non-default scheme. */
 class MockSchemeFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("mock:///")
+}
+
+/** `mockcount://`: counts the metadata requests made per path — `exists`
+  * and `getFileStatus`, each a HEAD on an object store. `open` makes one
+  * too: it calls `getFileStatus` to fail fast on a missing file. */
+class CountingMockFs extends MockSchemeFs {
+  override def getUri: URI = URI.create("mockcount:///")
+  override def exists(f: Path): Boolean = { CountingMockFs.note(f); super.exists(f) }
+  override def getFileStatus(f: Path): FileStatus = { CountingMockFs.note(f); super.getFileStatus(f) }
+}
+
+object CountingMockFs {
+  val calls = new ConcurrentHashMap[String, AtomicInteger]()
+  def note(f: Path): Unit = calls.computeIfAbsent(
+    Path.getPathWithoutSchemeAndAuthority(f).toString, _ => new AtomicInteger).incrementAndGet()
+  def count(path: String): Int = Option(calls.get(path)).map(_.get).getOrElse(0)
 }
 
 /** The object-store readiness gate the sandbox allows: no S3 endpoint
@@ -49,7 +67,7 @@ class MockSchemeFsSpec extends AnyFunSuite {
 
     // driver-side metadata write + executor-side chunk write (ZarrIO)
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.write(SyntheticStack.generate(spark, vol), dir, vol)
+    ZarrIO.writeChunks(SyntheticStack.generate(spark, vol), dir, typesize = vol.dtype.itemSize)
 
     // DSv2 read back through the same scheme, voxel-exact
     val back = spark.read.format(classOf[ZarrDataSource].getName)
@@ -70,6 +88,27 @@ class MockSchemeFsSpec extends AnyFunSuite {
     assert(spark.read.format(classOf[ZarrDataSource].getName)
       .option("path", dir).option("stack", "mk").option("level", "0")
       .load().count() == 8)
+  }
+
+  test("reading a present chunk through format(\"zarr\") makes one metadata request") {
+    spark.sparkContext // force session init: mockcount:// resolves via ITS conf
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.mockcount.impl", classOf[CountingMockFs].getName)
+    val local = Files.createTempDirectory("zarr-mockcount").toString
+    val dir = "mockcount://" + local
+    val vol = Volume("ct", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    ZarrIO.writeChunks(SyntheticStack.generate(spark, vol), dir)
+    CountingMockFs.calls.clear()
+    val rows = spark.read.format(classOf[ZarrDataSource].getName)
+      .option("path", dir).option("stack", "ct").option("level", "0").load()
+      .filter(col("z") === 1 && col("y") === 0 && col("x") === 0).collect()
+    assert(rows.length == 1)
+    assert(rows(0).getAs[Array[Byte]]("data").length == 8 * 8 * 8 * 2)
+    // the open's own existence check is the only one: no exists or
+    // getFileStatus probe before it
+    val chunk = s"$local/ct/0/0/0/1/0/0"
+    assert(CountingMockFs.count(chunk) == 1, CountingMockFs.calls)
   }
 
   test("CZI scan reads subblocks through a non-default scheme") {

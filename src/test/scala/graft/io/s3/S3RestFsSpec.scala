@@ -192,7 +192,7 @@ class S3RestFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vol = Volume("s3", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
 
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.write(SyntheticStack.generate(spark, vol), dir, vol)
+    ZarrIO.writeChunks(SyntheticStack.generate(spark, vol), dir, typesize = vol.dtype.itemSize)
 
     val back = spark.read.format(classOf[ZarrDataSource].getName)
       .option("path", dir).option("stack", "s3").option("level", "0").load()

@@ -304,7 +304,7 @@ class S3RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = s"s3r://$bucket/zarr-throttled"
     val vol = Volume("thr", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.write(SyntheticStack.generate(spark, vol), dir, vol)
+    ZarrIO.writeChunks(SyntheticStack.generate(spark, vol), dir, typesize = vol.dtype.itemSize)
     assert(injected.get() > 0, "the burst actually fired during the commit")
 
     val back = spark.read.format(classOf[ZarrDataSource].getName)

@@ -324,4 +324,21 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     assert(rows.length == 1)
     assert(rows(0).getAs[Array[Byte]]("data").forall(_ == 0))
   }
+
+  test("a chunk frame of the wrong length fails the read, naming the chunk path") {
+    val dir = Files.createTempDirectory("zarr-dsv2-len").toString
+    val vol = Volume("w", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    ZarrIO.writeChunks(SyntheticStack.generate(spark, vol), dir)
+    // a well-formed Blosc frame that decodes to half the chunk's bytes
+    val chunkFile = java.nio.file.Paths.get(dir, "w", "0", "0", "0", "0", "0", "0")
+    Files.write(chunkFile, graft.core.Blosc.compress(new Array[Byte](8 * 8 * 8), 2, 3))
+    val df = spark.read.format(fmt).option("path", dir).option("stack", "w").load()
+    val e = intercept[org.apache.spark.SparkException](df.collect())
+    val msg = String.valueOf(e.getCause.getMessage)
+    assert(msg.contains("corrupt zarr chunk at") && msg.contains("w/0/0/0/0/0/0") &&
+      msg.contains("512 bytes, expected 1024"), msg)
+    // a data-free projection never opens the file, so it still plans and reads
+    assert(df.select("z", "y", "x").count() == 1)
+  }
 }

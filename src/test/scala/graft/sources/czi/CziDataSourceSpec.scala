@@ -97,6 +97,54 @@ class CziDataSourceSpec extends AnyFunSuite {
     assert(longCase == intCase, s"long literal planned $longCase, int $intCase")
   }
 
+  test("z IN (...) prunes to its slab envelope and stays residual; rows are exact") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.sources.In
+    val path = fixture() // chunk_z 4: 4 slabs per channel, 8 partitions unpruned
+    val in = In("z", Array[Any](1, 2))
+    val builder = new CziScanBuilder(path, "f", Array(4, 16, 16))
+    assert(builder.pushFilters(Array(in)).toSeq == Seq(in))
+    assert(builder.pushedFilters().isEmpty)
+    val df = spark.read.format("czi").option("path", path)
+      .option("chunk_z", "4").option("chunk_y", "16").option("chunk_x", "16")
+      .load()
+      .filter(col("z").isin(1, 2))
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b
+    }.get
+    // 2 channels x slabs 1..2
+    assert(scan.inputPartitions.size == 4, scan.inputPartitions)
+    assert(scan.scan.description().contains("z=[1..2]"), scan.scan.description())
+    val rows = df.collect()
+    assert(rows.length == 2 * 2 * 2 * 2) // c x slabs x gridY x gridX
+    assert(rows.map(_.getAs[Int]("z")).toSet == Set(1, 2))
+    val r = rows.find(r => r.getAs[Int]("c") == 1 && r.getAs[Int]("z") == 2 &&
+      r.getAs[Int]("y") == 1 && r.getAs[Int]("x") == 0).get
+    val px = graft.core.PixelCodec.toInts(r.getAs[Array[Byte]]("data"))
+    assert(px(0) == ((SyntheticStack.value(8, 16, 0) + 1000) & 0xFFFF))
+  }
+
+  test("a y filter stays residual on the czi connector: a slab partition emits every tile") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.sources.EqualTo
+    val path = fixture()
+    val eq = EqualTo("y", 0)
+    val builder = new CziScanBuilder(path, "f", Array(4, 16, 16))
+    assert(builder.pushFilters(Array(eq)).toSeq == Seq(eq))
+    assert(builder.pushedFilters().isEmpty)
+    val df = spark.read.format("czi").option("path", path)
+      .option("chunk_z", "4").option("chunk_y", "16").option("chunk_x", "16")
+      .load()
+      .filter(col("y") === 0)
+    val scan = df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b
+    }.get
+    assert(!scan.scan.description().contains("y="), scan.scan.description())
+    val rows = df.collect()
+    assert(rows.length == 2 * 4 * 2) // c x slabs x gridX, one tile row each
+    assert(rows.forall(_.getAs[Int]("y") == 0))
+  }
+
   test("data-free projection synthesizes rows from arithmetic, no subblock read") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val path = fixture()

@@ -37,7 +37,11 @@ class CziSpec extends AnyFunSuite {
     assert(s.s3Location.contains("mock://out/prefix"))
     assert(s.chunkSize.toSeq == Seq(64, 64, 64))
     assert(s.downsampleLevels == 2)
-    assert(s.targetSizeMb == 1024L)
+    // target_size_mb (superblock batching) has no field any more: the env
+    // var above and the JSON key still parse, and the value is ignored
+    assert(ZeissJob.parseSettings(
+      """{"input_source":"/a","output_directory":"/b","target_size_mb":1024}""")
+      .inputSource == "/a")
     // unset fields keep the JSON path's defaults
     assert(s.scaleFactor.toSeq == Seq(2, 2, 2))
     assert(s.compressorLevel == 3)
@@ -64,7 +68,6 @@ class CziSpec extends AnyFunSuite {
       strict.scaleFactor.toSeq == single.scaleFactor.toSeq &&
       strict.downsampleLevels == single.downsampleLevels &&
       strict.compressorLevel == single.compressorLevel &&
-      strict.targetSizeMb == single.targetSizeMb &&
       strict.maxConcurrentStacks == single.maxConcurrentStacks &&
       strict.s3Location == single.s3Location)
     assert(single.inputSource == "/a" && single.outputDirectory == "/b")
